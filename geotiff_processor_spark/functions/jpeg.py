@@ -163,12 +163,6 @@ def _encode_table(bits: list[int], vals: list[int]
     return out
 
 
-def _decode_table(bits: list[int], vals: list[int]
-                  ) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol."""
-    return {(ln, code): sym
-            for sym, (code, ln) in _encode_table(bits, vals).items()}
-
 
 # 16-bit-peek huffman LUTs, memoized on the raw DHT payload: every
 # prefix of a code maps to (symbol, code length) so one table lookup

@@ -1,11 +1,11 @@
-"""Hillshade + colored-preview chain (SURVEY.md W2/J4/M5).
+"""Hillshade + the preview scalar chain (SURVEY.md W2/M5).
 
 Reference: gdaldem hillshade with azimuth=90, zFactor=5
 (/root/reference/export_formats/previews.py:83-92), gamma adjust
-``uint8(((A/255)*0.5)*255)`` (previews.py:95-99), soft-light blend with
-the color-relief (previews.py:102-111), PIL contrast 1.12
-(previews.py:113-117), color-relief via the 7-break palette range join
-(previews.py:73-81).
+``uint8(((A/255)*0.5)*255)`` (previews.py:95-99), soft-light blend
+(previews.py:102-111) and PIL contrast 1.12 (previews.py:113-117) as
+SQL scalars; the 7-break color-relief CASE (previews.py:73-81) lives in
+the ``palette_join`` query.
 
 Hillshade is the 3x3-neighborhood operator (Horn gradients): per-tile
 ``applyInPandas`` with a 1-pixel halo exchange — each pixel row is
@@ -142,34 +142,3 @@ def sql_contrast(c: str, mean: str, factor: float = 1.12) -> str:
     clamped to [0, 255] (previews.py:113-117)."""
     e = f"({mean} + {factor} * ({c} - {mean}))"
     return f"cast(least(greatest(round({e}), 0), 255) as bigint)"
-
-
-def sql_palette_color(elev: str, breaks: list[float],
-                      colors: list[str]) -> str:
-    """Color-relief range join as a chained CASE over the 7 breaks
-    (J4: few breaks => expression beats an actual join)."""
-    cases = []
-    for lo, color in zip(reversed(breaks), reversed(colors)):
-        cases.append(f"when {elev} >= {lo!r} then '{color}'")
-    return "case " + " ".join(cases) + f" else '{colors[0]}' end"
-
-
-def colored_hillshade(raster: DataFrame, breaks: list[float],
-                      colors: list[str], tile: int = 64,
-                      value_col: str = "elev") -> DataFrame:
-    """Full preview chain: hillshade -> gamma -> palette join on elev ->
-    soft-light blend; contrast left to the caller (needs the global
-    mean, an aggregate)."""
-    hs = hillshade(raster, tile=tile, value_col=value_col)
-    hs = hs.withColumn(
-        "gamma", F.expr(sql_gamma("cast(round(shade) as bigint)")))
-    base = raster.select("map_id", "px", "py", F.col(value_col).alias("z"))
-    j = hs.join(base, ["map_id", "px", "py"])
-    j = j.withColumn("hexcolor",
-                     F.expr(sql_palette_color("z", breaks, colors)))
-    # blend the gamma hillshade with the red channel of the palette color
-    j = j.withColumn(
-        "r_pal",
-        F.expr("cast(conv(substring(hexcolor, 2, 2), 16, 10) as bigint)"))
-    return j.withColumn("blended",
-                        F.expr(sql_softlight_blend("gamma", "r_pal")))

@@ -2,20 +2,23 @@
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct. Every magic kind the sniffer knows decodes for REAL:
-PNG via ``functions.png`` (stdlib zlib), baseline JPEG via
-``functions.jpeg`` (huffman + IDCT + YCbCr->RGB), GIF via
-``functions.gif`` (LZW), RIFF/WAVE via ``functions.wav``, and video
-via ``functions.y4m`` — no PIL/libjpeg/ffmpeg needed. Unknown payload
-kinds fall back to a deterministic fake decoder (default) or raise
-(strict mode) — the slot where ffmpeg would plug in on a real cluster
-for compressed video/audio containers.
+PNG via ``functions.png`` (stdlib zlib), baseline and progressive JPEG
+via ``functions.jpeg`` (huffman + IDCT + YCbCr->RGB, batched across
+same-geometry payloads), GIF via ``functions.gif`` (LZW), (Geo)TIFF via
+``functions.tiff`` (strip walk, PackBits/Deflate/LZW), RIFF/WAVE via
+``functions.wav``, and video via ``functions.y4m`` — no
+PIL/libjpeg/ffmpeg needed. The image kinds share one magic-byte ->
+codec table (``_decode_rgb``). Unknown payload kinds fall back to a
+deterministic fake decoder (default) or raise (strict mode) — the slot
+where ffmpeg would plug in on a real cluster for compressed
+video/audio containers.
 
 Operators:
 - ``extract_media_meta``: sniff magic bytes + sizes from the binary
   column — native expressions only (substring on binary), no Python.
-- ``decode_images``: mapInPandas batch decoder — real PNG decode where
-  the magic matches, fake/strict elsewhere; emits (h, w, mean RGB),
-  the post-decode feature extraction of a training pipeline.
+- ``decode_images``: mapInPandas batch decoder — real PNG/JPEG/GIF/TIFF
+  decode where the magic matches, fake/strict elsewhere; emits (h, w,
+  mean RGB), the post-decode feature extraction of a training pipeline.
 - ``thumbnail_stats``: "resize" analog — block-average the pixel grid
   to a fixed thumbnail, emit per-channel means (the reference's
   preview downsample, /root/reference/export_formats/previews.py:24-39).
@@ -39,8 +42,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-STRICT_DECODE = False  # flip to surface NotImplementedError in executors
 
 _MAGIC = [
     ("jpeg", b"\xff\xd8\xff"),
@@ -84,84 +85,115 @@ def _fake_decode(payload: bytes, h: int = 16, w: int = 16) -> np.ndarray:
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
+def _sniff(payload: bytes) -> str:
+    """Magic kind of one payload: the Python twin of the
+    ``extract_media_meta`` expression (first ``_MAGIC`` match wins)."""
+    return next((k for k, m in _MAGIC if payload.startswith(m)), "bin")
+
+
+def _gray3(arr: np.ndarray) -> np.ndarray:
+    """The DEM rule: a single-band (float) raster becomes a float64
+    gray 3-band image; RGB passes through."""
+    if arr.ndim == 3:
+        return arr
+    return np.repeat(arr.astype(np.float64)[:, :, None], 3, axis=2)
+
+
+def _decode_rgb(payloads: list[bytes], h: int, w: int,
+                strict: bool) -> list[np.ndarray]:
+    """The one magic-byte -> codec table of the image operators: each
+    payload becomes a 3-channel image — uint8 RGB for PNG, JPEG
+    (baseline or progressive, decoded in one ``decode_jpeg_batch``
+    call), GIF and RGB TIFF; float64 gray for a DEM TIFF (``_gray3``).
+    Other kinds use the deterministic (h, w) fake decoder, or raise
+    with ``strict`` (the ffmpeg slot for containers without a codec
+    here)."""
+    from ..functions.gif import decode_gif
+    from ..functions.jpeg import decode_jpeg_batch
+    from ..functions.png import decode_png
+    from ..functions.tiff import decode_tiff
+
+    imgs: list = [None] * len(payloads)
+    jpeg_idx: list[int] = []
+    for i, p in enumerate(payloads):
+        kind = _sniff(p)
+        if kind == "jpeg":
+            jpeg_idx.append(i)
+        elif kind == "png":
+            imgs[i] = decode_png(p)[:, :, :3]
+        elif kind == "gif":
+            imgs[i] = decode_gif(p)
+        elif kind == "tiff":
+            imgs[i] = _gray3(decode_tiff(p)[0])
+        elif strict:
+            raise ValueError(
+                f"no codec for payload magic {p[:4]!r}: only the"
+                " built-in PNG, JPEG, GIF and (Geo)TIFF codecs are"
+                " available (ffmpeg slot)")
+        else:
+            imgs[i] = _fake_decode(p, h, w)
+    jpegs = decode_jpeg_batch([payloads[i] for i in jpeg_idx])
+    for i, img in zip(jpeg_idx, jpegs):
+        imgs[i] = img
+    return imgs
+
+
+def _by_shape(arrays: list[np.ndarray], reduce) -> list:
+    """``reduce`` applied to each group of same-shape, same-dtype
+    arrays stacked along a new leading axis; returns the per-array
+    results in input order. The decoders' one batching loop: on
+    corpora of small uniform payloads, per-array numpy dispatch
+    dominates the reductions."""
+    out: list = [None] * len(arrays)
+    groups: dict[tuple, list[int]] = {}
+    for i, a in enumerate(arrays):
+        groups.setdefault((a.shape, a.dtype.str), []).append(i)
+    for idxs in groups.values():
+        for i, r in zip(idxs, reduce(np.stack([arrays[i] for i in idxs]))):
+            out[i] = r
+    return out
+
+
+def _rgb_means(imgs: list[np.ndarray]) -> np.ndarray:
+    """(n, 3) per-image channel means. A uint8 stack reduces in one
+    call: integer sums are exact in float64, so any reduction order
+    gives each image's mean bit for bit. Float images (DEM gray) reduce
+    one by one, keeping the per-image summation order."""
+    def means(stack):
+        flat = stack.reshape(len(stack), -1, 3)
+        if stack.dtype == np.uint8:
+            return flat.mean(axis=1)
+        return [f.mean(axis=0) for f in flat]
+
+    return np.array(_by_shape(imgs, means), np.float64).reshape(-1, 3)
+
+
 def decode_images(df: DataFrame, payload_col: str = "html",
                   key_col: str = "url", h: int = 16, w: int = 16,
-                  strict: bool | None = None) -> DataFrame:
+                  strict: bool = False) -> DataFrame:
     """Batch image decode via mapInPandas (Arrow-vectorized transfer).
 
     Returns (key, height, width, mean_r, mean_g, mean_b) — the feature
-    extraction a training pipeline runs post-decode. PNG, baseline
-    JPEG and GIF payloads all decode for REAL (functions.png/.jpeg/
-    .gif); unknown payload kinds use the deterministic fake decoder,
-    or raise with strict=True (the remaining ffmpeg slot for
-    compressed containers this repo has no codec for).
+    extraction a training pipeline runs post-decode. PNG, baseline and
+    progressive JPEG, GIF and (Geo)TIFF payloads all decode for REAL
+    (``_decode_rgb``; a DEM TIFF averages as gray); unknown payload
+    kinds use the deterministic fake decoder, or raise with
+    strict=True (the remaining ffmpeg slot for compressed containers
+    this repo has no codec for).
     """
-    strict = STRICT_DECODE if strict is None else strict
     schema = (f"{key_col} string, height int, width int,"
               " mean_r double, mean_g double, mean_b double")
 
     def decode(batches):
-        from ..functions.gif import decode_gif
-        from ..functions.jpeg import decode_jpeg_batch
-        from ..functions.png import decode_png
-        from ..functions.tiff import decode_tiff
         for pdf in batches:
-            keys = pdf[key_col].tolist()
-            payloads = [bytes(p) for p in pdf[payload_col]]
-            imgs: list = [None] * len(payloads)
-            jpeg_idx: list[int] = []
-            for i, p in enumerate(payloads):
-                if p[:4] == b"\x89PNG":
-                    imgs[i] = decode_png(p)[:, :, :3]
-                elif p[:3] == b"\xff\xd8\xff":
-                    jpeg_idx.append(i)  # stage-2-batched below
-                elif p[:4] == b"GIF8":
-                    imgs[i] = decode_gif(p)
-                elif p[:4] in (b"II*\0", b"MM\0*"):
-                    arr = decode_tiff(p)[0]
-                    if arr.ndim != 3:          # float DEM -> gray 3-band
-                        arr = np.repeat(
-                            arr.astype(np.float64)[:, :, None], 3, axis=2)
-                    imgs[i] = arr
-                elif strict:
-                    raise ValueError(
-                        f"no codec for payload magic {p[:4]!r}: only the"
-                        " built-in PNG, JPEG, GIF and (Geo)TIFF codecs"
-                        " are available in this container (ffmpeg slot)")
-                else:
-                    imgs[i] = _fake_decode(p, h, w)
-            if jpeg_idx:
-                decoded = decode_jpeg_batch([payloads[i] for i in jpeg_idx])
-                for i, img in zip(jpeg_idx, decoded):
-                    imgs[i] = img
-            # per-channel means batched across same-shape uint8 images
-            # (integer pixel sums are exact in float64, so the batched
-            # reduction is bit-identical to per-image means); float
-            # images (DEM gray) keep the per-image path for exact fp
-            # reduction-order equivalence
-            n = len(imgs)
-            hh = [0] * n
-            ww = [0] * n
-            mr = [0.0] * n
-            mg = [0.0] * n
-            mb = [0.0] * n
-            by_shape: dict[tuple, list[int]] = {}
-            for i, im in enumerate(imgs):
-                hh[i], ww[i] = im.shape[0], im.shape[1]
-                if im.dtype == np.uint8:
-                    by_shape.setdefault(im.shape, []).append(i)
-                else:
-                    m = im.reshape(-1, 3).mean(axis=0)
-                    mr[i], mg[i], mb[i] = (float(m[0]), float(m[1]),
-                                           float(m[2]))
-            for idxs in by_shape.values():
-                arr = np.stack([imgs[i] for i in idxs])
-                m = arr.reshape(len(idxs), -1, 3).mean(axis=1)
-                for j, i in enumerate(idxs):
-                    mr[i], mg[i], mb[i] = (float(m[j, 0]), float(m[j, 1]),
-                                           float(m[j, 2]))
-            yield pd.DataFrame({key_col: keys, "height": hh, "width": ww,
-                                "mean_r": mr, "mean_g": mg, "mean_b": mb})
+            imgs = _decode_rgb([bytes(p) for p in pdf[payload_col]],
+                               h, w, strict)
+            m = _rgb_means(imgs)
+            yield pd.DataFrame({key_col: pdf[key_col].tolist(),
+                                "height": [im.shape[0] for im in imgs],
+                                "width": [im.shape[1] for im in imgs],
+                                "mean_r": m[:, 0], "mean_g": m[:, 1],
+                                "mean_b": m[:, 2]})
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
 
@@ -170,43 +202,37 @@ def decode_geotiff(df: DataFrame, payload_col: str = "tiff",
                    key_col: str = "url") -> DataFrame:
     """Batch GeoTIFF decode via mapInPandas (functions/tiff.py): the
     reference's own ingest format, parsed for real — strip walk,
-    PackBits/Deflate decompression, AND the georeferencing tags
+    PackBits/Deflate/LZW decompression, AND the georeferencing tags
     (ModelTiepoint + GeoKeyDirectory EPSG), so the oracle checks the
     geo transform alongside pixel content.
 
     Returns (key, height, width, mean_r, mean_g, mean_b, lonm, latm,
-    epsg) — tiepoint reported in exact millidegrees. Payload bytes
-    never shuffle; all downstream math is on extracted features."""
+    epsg) — tiepoint reported in exact millidegrees; a DEM averages as
+    gray (``_gray3``). Payload bytes never shuffle; all downstream math
+    is on extracted features."""
     schema = (f"{key_col} string, height int, width int,"
               " mean_r double, mean_g double, mean_b double,"
               " lonm bigint, latm bigint, epsg int")
 
+    def milli(v):
+        return None if v is None else round(v * 1000)
+
     def decode(batches):
         from ..functions.tiff import decode_tiff
         for pdf in batches:
-            out = {key_col: pdf[key_col].tolist(), "height": [],
-                   "width": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                   "lonm": [], "latm": [], "epsg": []}
-            for payload in pdf[payload_col]:
-                arr, meta = decode_tiff(bytes(payload))
-                if arr.ndim != 3:              # float DEM -> gray 3-band
-                    arr = np.repeat(
-                        arr.astype(np.float64)[:, :, None], 3, axis=2)
-                means = arr.reshape(-1, 3).mean(axis=0)
-                tie = meta["tiepoint"] or (None, None)
-                out["height"].append(meta["height"])
-                out["width"].append(meta["width"])
-                out["mean_r"].append(float(means[0]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[2]))
-                out["lonm"].append(
-                    None if tie[0] is None else round(tie[0] * 1000))
-                out["latm"].append(
-                    None if tie[1] is None else round(tie[1] * 1000))
-                out["epsg"].append(meta["epsg"])
-            yield pd.DataFrame(
-                {k: (pd.array(v, "Int64") if k in ("lonm", "latm", "epsg")
-                     else v) for k, v in out.items()})
+            decoded = [decode_tiff(bytes(p)) for p in pdf[payload_col]]
+            metas = [meta for _, meta in decoded]
+            ties = [meta["tiepoint"] or (None, None) for meta in metas]
+            m = _rgb_means([_gray3(arr) for arr, _ in decoded])
+            yield pd.DataFrame({
+                key_col: pdf[key_col].tolist(),
+                "height": [meta["height"] for meta in metas],
+                "width": [meta["width"] for meta in metas],
+                "mean_r": m[:, 0], "mean_g": m[:, 1], "mean_b": m[:, 2],
+                "lonm": pd.array([milli(t[0]) for t in ties], "Int64"),
+                "latm": pd.array([milli(t[1]) for t in ties], "Int64"),
+                "epsg": pd.array([meta["epsg"] for meta in metas],
+                                 "Int64")})
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
 
@@ -253,31 +279,25 @@ def decode_audio(df: DataFrame, payload_col: str = "wav",
     schema = (f"{key_col} string, n_frames int, sample_rate int,"
               " n_channels int, mean_abs double, peak int")
 
+    def amplitude(stack):
+        aa = np.abs(stack.astype(np.int64)).reshape(len(stack), -1)
+        return zip(aa.mean(axis=1), aa.max(axis=1))
+
     def decode(batches):
         from ..functions.wav import decode_wav
         for pdf in batches:
             decoded = [decode_wav(bytes(p)) for p in pdf[payload_col]]
-            n = len(decoded)
-            out = {key_col: pdf[key_col].tolist(),
-                   "n_frames": [a.shape[0] for _, a in decoded],
-                   "sample_rate": [r for r, _ in decoded],
-                   "n_channels": [a.shape[1] for _, a in decoded],
-                   "mean_abs": [0.0] * n, "peak": [0] * n}
-            # |sample| mean/peak batched across same-shape payloads
-            # (round 6): integer sums are exact in float64 at any
-            # reduction order, so values are identical to per-payload
-            by_shape: dict[tuple, list[int]] = {}
-            for i, (_r, a) in enumerate(decoded):
-                by_shape.setdefault(a.shape, []).append(i)
-            for idxs in by_shape.values():
-                aa = np.abs(np.stack(
-                    [decoded[i][1] for i in idxs]).astype(np.int64))
-                means = aa.reshape(len(idxs), -1).mean(axis=1)
-                peaks = aa.reshape(len(idxs), -1).max(axis=1)
-                for j, i in enumerate(idxs):
-                    out["mean_abs"][i] = float(means[j])
-                    out["peak"][i] = int(peaks[j])
-            yield pd.DataFrame(out)
+            samples = [a for _, a in decoded]
+            # integer sums are exact in float64 at any reduction order,
+            # so the batched values equal the per-payload ones
+            feats = _by_shape(samples, amplitude)
+            yield pd.DataFrame({
+                key_col: pdf[key_col].tolist(),
+                "n_frames": [a.shape[0] for a in samples],
+                "sample_rate": [r for r, _ in decoded],
+                "n_channels": [a.shape[1] for a in samples],
+                "mean_abs": [float(mean) for mean, _ in feats],
+                "peak": [int(peak) for _, peak in feats]})
 
     return df.select(key_col, payload_col).mapInPandas(decode, schema=schema)
 
@@ -309,19 +329,10 @@ def decode_video(df: DataFrame, payload_col: str = "y4m",
             decoded = [(key, decode_y4m(bytes(payload)))
                        for key, payload in zip(pdf[key_col],
                                                pdf[payload_col])]
-            # per-frame plane means batched across same-shape payloads
-            # (round 6): uint8 sums are exact in float64 at any
-            # reduction order, so values match the per-payload means
-            all_means: list = [None] * len(decoded)
-            by_shape: dict[tuple, list[int]] = {}
-            for i, (_k, (_w, _h, _fps, frames)) in enumerate(decoded):
-                by_shape.setdefault(frames.shape, []).append(i)
-            for idxs in by_shape.values():
-                stack = np.stack([decoded[i][1][3] for i in idxs]) \
-                    .astype(np.float64)
-                ms = stack.mean(axis=(2, 3))
-                for j, i in enumerate(idxs):
-                    all_means[i] = ms[j]
+            # per-frame plane means; uint8 sums are exact in float64 at
+            # any reduction order, so values match the per-payload means
+            all_means = _by_shape([d[3] for _, d in decoded],
+                                  lambda st: st.mean(axis=(2, 3)))
             rows = {k: [] for k in (key_col, "frame_idx", "n_frames",
                                     "width", "height", "fps_num",
                                     "mean_y", "mean_u", "mean_v")}
@@ -404,69 +415,46 @@ def frame_sample(df: DataFrame, payload_col: str = "html",
     return df.select(key_col, payload_col).mapInPandas(sample, schema=schema)
 
 
+def _dhash_bits(stack: np.ndarray) -> np.ndarray:
+    """dHash of each image of an (n, h, w, 3) stack: integer luma, one
+    bit per horizontal neighbour pair, packed row-major (uint64)."""
+    arr = stack.astype(np.int64)
+    g = 299 * arr[..., 0] + 587 * arr[..., 1] + 114 * arr[..., 2]
+    bits = (g[:, :, :-1] > g[:, :, 1:]).reshape(len(arr), -1)
+    weights = np.left_shift(
+        np.uint64(1), np.arange(bits.shape[1], dtype=np.uint64))
+    return (bits.astype(np.uint64) * weights).sum(axis=1)
+
+
 def image_dhash(df: DataFrame, payload_col: str = "png",
-                key_col: str = "url",
-                strict: bool | None = None) -> DataFrame:
+                key_col: str = "url", strict: bool = False) -> DataFrame:
     """Perceptual difference hash (dHash) per image — the multimodal
-    near-dup key: decode (real codecs), integer luma
-    (299R + 587G + 114B, exact in int32), then one bit per horizontal
+    near-dup key: decode (``_decode_rgb``: PNG, baseline and
+    progressive JPEG, GIF, RGB and DEM TIFF), integer luma
+    (299R + 587G + 114B, exact in int64), then one bit per horizontal
     neighbor pair (gray[y][x] > gray[y][x+1]) packed row-major into a
     bigint ((w-1) * h bits; 56 for the 8x8 media table). Images whose
     hash collides are near-duplicates up to brightness/contrast shifts
     — group on the hash exactly like text dedup groups on md5.
 
     Exactness: every step is integer arithmetic on decoded pixels, so
-    for losslessly-coded payloads (PNG/GIF) the hash is a pure
+    for losslessly-coded payloads (PNG/GIF/TIFF) the hash is a pure
     function of the planted formula and the DuckDB oracle recomputes
-    it bit-for-bit.
+    it bit-for-bit; the same pixels hash equal through every codec.
 
     Returns (key, dhash bigint).
     """
-    strict = STRICT_DECODE if strict is None else strict
     schema = f"{key_col} string, dhash bigint"
 
     def gen(batches):
-        from ..functions.gif import decode_gif
-        from ..functions.jpeg import decode_jpeg
-        from ..functions.png import decode_png
         for pdf in batches:
-            keys = pdf[key_col].tolist()
-            imgs = []
-            for payload in pdf[payload_col]:
-                p = bytes(payload)
-                if p[:4] == b"\x89PNG":
-                    img = decode_png(p)[:, :, :3]
-                elif p[:3] == b"\xff\xd8\xff":
-                    img = decode_jpeg(p)
-                elif p[:4] == b"GIF8":
-                    img = decode_gif(p)
-                elif strict:
-                    raise ValueError(
-                        f"no codec for payload magic {p[:4]!r}")
-                else:
-                    img = _fake_decode(p, 8, 8)
-                imgs.append(img)
-            # luma + bit packing vectorized across the batch, grouped
-            # by shape (round 6: ~7 numpy calls per image before) —
-            # identical integer arithmetic, just batched
-            hashes: list[int | None] = [None] * len(imgs)
-            by_shape: dict[tuple, list[int]] = {}
-            for i, im in enumerate(imgs):
-                by_shape.setdefault(im.shape, []).append(i)
-            for idxs in by_shape.values():
-                arr = np.stack([imgs[i] for i in idxs]).astype(np.int64)
-                g = (299 * arr[..., 0] + 587 * arr[..., 1]
-                     + 114 * arr[..., 2])
-                bits = (g[:, :, :-1] > g[:, :, 1:]).reshape(len(idxs), -1)
-                weights = np.left_shift(
-                    np.uint64(1), np.arange(bits.shape[1], dtype=np.uint64))
-                vals = (bits.astype(np.uint64) * weights).sum(axis=1)
-                for i, v in zip(idxs, vals):
-                    hashes[i] = int(v)
-            yield pd.DataFrame({key_col: keys,
+            imgs = _decode_rgb([bytes(p) for p in pdf[payload_col]],
+                               8, 8, strict)
+            hashes = [int(v) for v in _by_shape(imgs, _dhash_bits)]
+            yield pd.DataFrame({key_col: pdf[key_col].tolist(),
                                 "dhash": pd.array(hashes, "int64")})
 
-    return df.mapInPandas(gen, schema)
+    return df.select(key_col, payload_col).mapInPandas(gen, schema)
 
 
 def sql_image_dhash(dialect: str = "duckdb") -> str:

@@ -24,6 +24,15 @@ and the kNN query points.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+import uuid
+from typing import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -125,8 +134,6 @@ pages AS (
 def build_pages(spark: SparkSession, sf_dir: str,
                 with_html: bool = True) -> DataFrame:
     """Spark-side pages builder (same expressions via F.expr)."""
-    import os
-
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     p0 = events.select(F.col("event_id").alias("i"))
     pages = p0.select(
@@ -147,25 +154,21 @@ def build_pages(spark: SparkSession, sf_dir: str,
     return pages
 
 
-def build_pages_staged(spark: SparkSession, sf_dir: str,
-                       with_html: bool = True) -> DataFrame:
-    """build_pages materialized once to tmp parquet per sf_dir, then
-    read back columnar.
+def stage(spark: SparkSession, sf_dir: str, name: str, version: str,
+          write: Callable[[str], None]) -> str:
+    """Materialize an intermediate once per input and return its path.
 
     The reference stages its lazy intermediates the same way (tmp VRT,
-    helpers.py:150-163). Staging keeps downstream query plans reading a
-    real columnar source: synthesis expressions never fuse into (and
-    blow up) the query stage's generated code, and repeated queries()
-    calls don't re-synthesize.
-    """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    # fold the input's content fingerprint into the key: a regenerated
-    # events.parquet at the same path must not serve stale staged pages
+    helpers.py:150-163): staging keeps downstream plans reading a real
+    source, so synthesis expressions never fuse into (and blow up) a
+    query stage's generated code, and repeated queries() calls never
+    re-synthesize. The cache key folds in ``name``, ``version`` and a
+    fingerprint of ``events.parquet`` (file names, sizes, mtimes), so a
+    regenerated input at the same path never serves a stale stage;
+    bump ``version`` when the writer's OUTPUT changes. ``write(tmp)``
+    writes into a private ``.staging-<pid>-<uuid>`` directory that is
+    published by an atomic rename, so concurrent cache-missing sessions
+    never interleave writes and the loser's copy is discarded."""
     ev = os.path.join(sf_dir, "events.parquet")
     fps = []
     for p in ([ev] if os.path.isfile(ev) else
@@ -174,21 +177,37 @@ def build_pages_staged(spark: SparkSession, sf_dir: str,
         st = os.stat(p)
         fps.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
     key = hashlib.sha256(
-        f"{sf_dir}|html={with_html}|{';'.join(fps)}|v3".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"gps_pages_{key}.parquet")
+        f"{sf_dir}|{name}|{';'.join(fps)}|{version}".encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), f"gps_{name}_{key}")
     if not os.path.exists(path):
-        # unique staging dir per writer: concurrent cache-missing
-        # sessions never interleave writes inside one directory
         tmp = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        pages = build_pages(spark, sf_dir, with_html=with_html)
-        (pages.repartition(max(8, spark.sparkContext.defaultParallelism))
-         .write.mode("overwrite").parquet(tmp))
+        write(tmp)
         try:
             os.rename(tmp, path)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)  # concurrent writer won
-    return spark.read.parquet(path)
+    return path
+
+
+def stage_parquet(spark: SparkSession, sf_dir: str, name: str, version: str,
+                  build: Callable[[SparkSession, str], DataFrame]
+                  ) -> DataFrame:
+    """``stage`` for a builder's DataFrame, read back as parquet. The
+    builder runs only on a cache miss (some builders run eager jobs)."""
+    def write(tmp: str) -> None:
+        (build(spark, sf_dir)
+         .repartition(max(8, spark.sparkContext.defaultParallelism))
+         .write.mode("overwrite").parquet(tmp))
+
+    return spark.read.parquet(stage(spark, sf_dir, name, version, write))
+
+
+def build_pages_staged(spark: SparkSession, sf_dir: str,
+                       with_html: bool = True) -> DataFrame:
+    """build_pages materialized once per sf_dir, read back columnar."""
+    return stage_parquet(
+        spark, sf_dir, "pages", f"v4-html={with_html}",
+        lambda s, d: build_pages(s, d, with_html=with_html))
 
 
 def geocode(pages: DataFrame, cell_levels: int = 12) -> DataFrame:
@@ -403,52 +422,55 @@ def sql_media_mean(channel: int) -> str:
             f" / {MEDIA_SIZE * MEDIA_SIZE})")
 
 
+def _media_table(spark: SparkSession, sf_dir: str, column: str,
+                 encode_id: Callable[[int], bytes]) -> DataFrame:
+    """(url, <column>) — one synthesized payload per event: the
+    skeleton every media builder shares. ``encode_id(i)`` returns the
+    payload bytes of event id ``i``; it runs in the Arrow batches of
+    a mapInPandas over the events table."""
+    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    base = events.select(F.col("event_id").alias("i"),
+                         F.expr(SQL_URL).alias("url"))
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"url": pdf["url"], column: [
+                encode_id(i) for i in pdf["i"].tolist()]})
+
+    return base.mapInPandas(gen, f"url string, {column} binary")
+
+
 def build_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(url, png) — png is a REAL 8x8 RGB PNG (functions.png encoder)
     whose pixels derive from the event id with integer arithmetic, so
     the decode chain is end-to-end oracle-checkable: DuckDB recomputes
     the channel means straight from the formula while the engine gets
     them by actually decoding the bytes."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.png import encode_png
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
-    S = MEDIA_SIZE
+    yy, xx = np.mgrid[0:MEDIA_SIZE, 0:MEDIA_SIZE]
 
-    def gen(batches):
-        yy, xx = np.mgrid[0:S, 0:S]
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                img = np.stack([
-                    (i * ci + xx * cx + yy * cy) % 256
-                    for ci, cx, cy in MEDIA_CHANNEL_COEFS
-                ], axis=-1).astype(np.uint8)
-                # rotate the coding layout by id: filter None/Paeth x
-                # sequential/Adam7-interlaced — decoded pixels are
-                # layout-invariant (lossless), so the oracles stay
-                # blind to it while every decode-path variant is
-                # exercised by the driver-checked rows
-                v = int(i) % 4
-                payloads.append(encode_png(img,
-                                           filter_type=4 if v & 1 else 0,
-                                           interlace=bool(v & 2)))
-            yield pd.DataFrame({"url": pdf["url"], "png": payloads})
+    def encode(i: int) -> bytes:
+        img = np.stack([(i * ci + xx * cx + yy * cy) % 256
+                        for ci, cx, cy in MEDIA_CHANNEL_COEFS],
+                       axis=-1).astype(np.uint8)
+        # rotate the coding layout by id: filter None/Paeth x
+        # sequential/Adam7-interlaced — decoded pixels are
+        # layout-invariant (lossless), so the oracles stay blind to it
+        # while every decode-path variant is exercised by the
+        # oracle-checked rows
+        v = i % 4
+        return encode_png(img, filter_type=4 if v & 1 else 0,
+                          interlace=bool(v & 2))
 
-    return base.mapInPandas(gen, "url string, png binary")
+    return _media_table(spark, sf_dir, "png", encode)
 
 
 def build_media_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """build_media materialized once per sf_dir (same staging rationale
-    as build_pages_staged — payload synthesis never re-runs per query)."""
-    return _stage_media(spark, sf_dir, "media", build_media,
-                        version="v2-adam7-paeth")
+    """build_media materialized once per sf_dir (``stage_parquet``:
+    payload synthesis never re-runs per query)."""
+    return stage_parquet(spark, sf_dir, "media", "v2-adam7-paeth",
+                         build_media)
 
 
 # ---------------------------------------------------------------------------
@@ -478,36 +500,22 @@ def build_media_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(url, wav) — wav is a REAL PCM16 RIFF/WAVE payload whose samples
     derive from the event id with integer arithmetic (lossless codec =>
     bit-exact oracle check of the full parse + feature extraction)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.wav import encode_wav
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
     a, b, c = WAV_COEFS
+    t = np.arange(WAV_FRAMES, dtype=np.int64)[:, None]
 
-    def gen(batches):
-        t = np.arange(WAV_FRAMES, dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                ch = 1 + int(i) % 2
-                cs = np.arange(ch, dtype=np.int64)
-                s = ((int(i) * a + t[:, None] * b + cs[None, :] * c)
-                     % 4096) - 2048
-                payloads.append(encode_wav(s.astype(np.int16), WAV_RATE))
-            yield pd.DataFrame({"url": pdf["url"], "wav": payloads})
+    def encode(i: int) -> bytes:
+        cs = np.arange(1 + i % 2, dtype=np.int64)[None, :]
+        s = ((i * a + t * b + cs * c) % 4096) - 2048
+        return encode_wav(s.astype(np.int16), WAV_RATE)
 
-    return base.mapInPandas(gen, "url string, wav binary")
+    return _media_table(spark, sf_dir, "wav", encode)
 
 
 def build_media_wav_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_media_wav materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "media_wav", build_media_wav)
+    return stage_parquet(spark, sf_dir, "media_wav", "v1", build_media_wav)
 
 
 # ---------------------------------------------------------------------------
@@ -536,48 +544,34 @@ def build_media_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(url, gif) — gif is a REAL GIF89a payload (functions/gif LZW
     encoder) whose palette indices derive from the event id; LZW is
     lossless, so the full parse + palette mapping is oracle-exact."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.gif import encode_gif
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
     a, b, c = GIF_IDX_COEFS
     p, q, r = GIF_PAL_COEFS
-    s = GIF_SIZE
+    y = np.arange(GIF_SIZE, dtype=np.int64)[:, None]
+    x = np.arange(GIF_SIZE, dtype=np.int64)[None, :]
+    cs = np.arange(256, dtype=np.int64)[:, None]
+    ch = np.arange(3, dtype=np.int64)[None, :]
+    pal = ((cs * p + ch * q + r) % 256).astype(np.uint8)
 
-    def gen(batches):
-        y = np.arange(s, dtype=np.int64)[:, None]
-        x = np.arange(s, dtype=np.int64)[None, :]
-        cs = np.arange(256, dtype=np.int64)[:, None]
-        ch = np.arange(3, dtype=np.int64)[None, :]
-        pal = ((cs * p + ch * q + r) % 256).astype(np.uint8)
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                idx = ((int(i) * a + y * b + x * c) % 256).astype(np.uint8)
-                # rotate the encoding layout by id: sequential/GCT,
-                # interlaced, local-color-table, interlaced+LCT — the
-                # decoded pixels are identical (same index formula and
-                # palette), so the oracle is layout-blind while the
-                # decode query exercises every descriptor path
-                v = int(i) % 4
-                payloads.append(encode_gif(idx, pal,
-                                           interlace=bool(v & 1),
-                                           local_palette=bool(v & 2)))
-            yield pd.DataFrame({"url": pdf["url"], "gif": payloads})
+    def encode(i: int) -> bytes:
+        idx = ((i * a + y * b + x * c) % 256).astype(np.uint8)
+        # rotate the encoding layout by id: sequential/GCT, interlaced,
+        # local-color-table, interlaced+LCT — the decoded pixels are
+        # identical (same index formula and palette), so the oracle is
+        # layout-blind while the decode query exercises every
+        # descriptor path
+        v = i % 4
+        return encode_gif(idx, pal, interlace=bool(v & 1),
+                          local_palette=bool(v & 2))
 
-    return base.mapInPandas(gen, "url string, gif binary")
+    return _media_table(spark, sf_dir, "gif", encode)
 
 
 def build_media_gif_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_media_gif materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "media_gif", build_media_gif,
-                        version="v2-interlace-lct")
+    return stage_parquet(spark, sf_dir, "media_gif", "v2-interlace-lct",
+                         build_media_gif)
 
 
 # ---------------------------------------------------------------------------
@@ -609,47 +603,33 @@ def build_media_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     {multi-strip, single-strip} so one table exercises every codec
     path; pixels and geo tags are identical formulas either way, so
     the oracle is layout-blind."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.tiff import encode_tiff
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
     a, b, c, d = TIFF_COEFS
     s = TIFF_SIZE
+    y = np.arange(s, dtype=np.int64)[:, None, None]
+    x = np.arange(s, dtype=np.int64)[None, :, None]
+    ch = np.arange(3, dtype=np.int64)[None, None, :]
+    grid = y * b + x * c + ch * d
 
-    def gen(batches):
-        y = np.arange(s, dtype=np.int64)[:, None, None]
-        x = np.arange(s, dtype=np.int64)[None, :, None]
-        ch = np.arange(3, dtype=np.int64)[None, None, :]
-        grid = y * b + x * c + ch * d
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                img = ((int(i) * a + grid) % 256).astype(np.uint8)
-                comp = (1, 8, 32773, 5, 5)[int(i) % 5]
-                pred = 2 if int(i) % 5 == 4 else 1
-                rps = 7 if int(i) % 2 else s
-                lonm = (int(i) * 77 + 13) % 360000 - 180000
-                latm = (int(i) * 53 + 7) % 120000 - 60000
-                payloads.append(encode_tiff(
-                    img, compression=comp, rows_per_strip=rps,
-                    pixel_scale=(0.001, 0.001),
-                    tiepoint=(lonm / 1000.0, latm / 1000.0), epsg=4326,
-                    predictor=pred))
-            yield pd.DataFrame({"url": pdf["url"], "tiff": payloads})
+    def encode(i: int) -> bytes:
+        img = ((i * a + grid) % 256).astype(np.uint8)
+        lonm = (i * 77 + 13) % 360000 - 180000
+        latm = (i * 53 + 7) % 120000 - 60000
+        return encode_tiff(
+            img, compression=(1, 8, 32773, 5, 5)[i % 5],
+            rows_per_strip=7 if i % 2 else s,
+            pixel_scale=(0.001, 0.001),
+            tiepoint=(lonm / 1000.0, latm / 1000.0), epsg=4326,
+            predictor=2 if i % 5 == 4 else 1)
 
-    return base.mapInPandas(gen, "url string, tiff binary")
+    return _media_table(spark, sf_dir, "tiff", encode)
 
 
 def build_media_tiff_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_media_tiff materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "media_tiff", build_media_tiff,
-                        version="v2-lzw-predictor")
+    return stage_parquet(spark, sf_dir, "media_tiff", "v2-lzw-predictor",
+                         build_media_tiff)
 
 
 # ---------------------------------------------------------------------------
@@ -677,75 +657,26 @@ def build_media_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from the event id with integer arithmetic (lossless codec =>
     bit-exact oracle check of the full parse + frame sampling +
     feature extraction)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.y4m import encode_y4m
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
     a, b, c, d, e = VIDEO_COEFS
     n, s = VIDEO_FRAMES, VIDEO_SIZE
+    f = np.arange(n, dtype=np.int64)[:, None, None, None]
+    y = np.arange(s, dtype=np.int64)[None, :, None, None]
+    x = np.arange(s, dtype=np.int64)[None, None, :, None]
+    p = np.arange(3, dtype=np.int64)[None, None, None, :]
+    grid = f * b + y * c + x * d + p * e
 
-    def gen(batches):
-        f = np.arange(n, dtype=np.int64)[:, None, None, None]
-        y = np.arange(s, dtype=np.int64)[None, :, None, None]
-        x = np.arange(s, dtype=np.int64)[None, None, :, None]
-        p = np.arange(3, dtype=np.int64)[None, None, None, :]
-        grid = f * b + y * c + x * d + p * e
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                v = ((int(i) * a + grid) % 251).astype(np.uint8)
-                payloads.append(encode_y4m(v, (VIDEO_FPS, 1)))
-            yield pd.DataFrame({"url": pdf["url"], "y4m": payloads})
+    def encode(i: int) -> bytes:
+        return encode_y4m(((i * a + grid) % 251).astype(np.uint8),
+                          (VIDEO_FPS, 1))
 
-    return base.mapInPandas(gen, "url string, y4m binary")
+    return _media_table(spark, sf_dir, "y4m", encode)
 
 
 def build_media_y4m_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_media_y4m materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "media_y4m", build_media_y4m)
-
-
-def _stage_media(spark: SparkSession, sf_dir: str, name: str,
-                 builder, version: str = "v1") -> DataFrame:
-    """Shared staging for synthesized media tables (same rationale as
-    build_pages_staged: synthesis never re-runs per query).
-
-    ``version`` is part of the cache key — bump it in the caller when
-    the builder's OUTPUT changes (the key otherwise only fingerprints
-    the input parquet, so a stale stage would silently mask new
-    encoder paths)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    ev = os.path.join(sf_dir, "events.parquet")
-    fps = []
-    for p in ([ev] if os.path.isfile(ev) else
-              sorted(os.path.join(ev, f) for f in os.listdir(ev))
-              if os.path.isdir(ev) else []):
-        st = os.stat(p)
-        fps.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha256(
-        f"{sf_dir}|{name}|{';'.join(fps)}|{version}".encode()).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"gps_{name}_{key}.parquet")
-    if not os.path.exists(path):
-        tmp = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        media = builder(spark, sf_dir)
-        (media.repartition(max(8, spark.sparkContext.defaultParallelism))
-         .write.mode("overwrite").parquet(tmp))
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    return stage_parquet(spark, sf_dir, "media_y4m", "v1", build_media_y4m)
 
 
 # ---------------------------------------------------------------------------
@@ -799,53 +730,33 @@ def build_media_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
       baseline encoder's, so the round trip stays exact
     - i%4 == 3: baseline 4:2:0 with a restart interval (DRI + RSTn
       every MCU)"""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
     from ..functions.jpeg import encode_jpeg_planes, \
         encode_jpeg_progressive
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = events.select(F.col("event_id").alias("i"),
-                         F.expr(SQL_URL).alias("url"))
     nb = JPEG_SIZE // 8
 
     def _plane(i: int, channel: int, n_blocks: int) -> np.ndarray:
         ci, cx, cy = JPEG_YCBCR_COEFS[channel]
-        plane = np.zeros((n_blocks * 8, n_blocks * 8), np.uint8)
-        for by in range(n_blocks):
-            for bx in range(n_blocks):
-                plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                    (i * ci + bx * cx + by * cy) % 256
-        return plane
+        blk = np.arange(n_blocks, dtype=np.int64)
+        vals = (i * ci + blk[None, :] * cx + blk[:, None] * cy) % 256
+        return vals.astype(np.uint8).repeat(8, axis=0).repeat(8, axis=1)
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for i in pdf["i"].to_numpy(np.int64):
-                i = int(i)
-                v = i % 4
-                if v in (1, 3):  # 4:2:0 — chroma at half resolution
-                    planes = [_plane(i, 0, nb),
-                              _plane(i, 1, nb // 2),
-                              _plane(i, 2, nb // 2)]
-                    payloads.append(encode_jpeg_planes(
-                        planes, subsample="420",
-                        restart_interval=1 if v == 3 else 0))
-                elif v == 2:
-                    planes = [_plane(i, c, nb) for c in range(3)]
-                    payloads.append(encode_jpeg_progressive(planes))
-                else:
-                    planes = [_plane(i, c, nb) for c in range(3)]
-                    payloads.append(encode_jpeg_planes(planes))
-            yield pd.DataFrame({"url": pdf["url"], "jpg": payloads})
+    def encode(i: int) -> bytes:
+        v = i % 4
+        if v in (1, 3):  # 4:2:0 — chroma at half resolution
+            planes = [_plane(i, 0, nb), _plane(i, 1, nb // 2),
+                      _plane(i, 2, nb // 2)]
+            return encode_jpeg_planes(planes, subsample="420",
+                                      restart_interval=1 if v == 3 else 0)
+        planes = [_plane(i, c, nb) for c in range(3)]
+        if v == 2:
+            return encode_jpeg_progressive(planes)
+        return encode_jpeg_planes(planes)
 
-    return base.mapInPandas(gen, "url string, jpg binary")
+    return _media_table(spark, sf_dir, "jpg", encode)
 
 
 def build_media_jpeg_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_media_jpeg materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "media_jpeg", build_media_jpeg,
-                        version="v3-progressive-dri")
+    return stage_parquet(spark, sf_dir, "media_jpeg", "v3-progressive-dri",
+                         build_media_jpeg)

@@ -22,9 +22,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLES) -> None:
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -2,7 +2,7 @@
 
 Crawl-adjacent corpora arrive as JSON-lines and CSV at least as often
 as parquet; these helpers stage the canonical pages table in both
-formats (content-keyed, same discipline as ``_stage_media``) and read
+formats (through ``synth.stage``, keyed on the events content) and read
 them back with EXPLICIT schemas — schema inference is a scale
 anti-pattern (it double-scans the input), so the read path pins
 ``.schema(...)`` + FAILFAST, the posture a production ingest runs with.
@@ -13,41 +13,28 @@ timestamp-format bug in either direction breaks the hash.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .synth import build_pages_staged
+from .synth import build_pages_staged, stage
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 PAGES_DDL = "url string, warc_ts timestamp, text string, lang string"
 
 
-def _stage_text(spark: SparkSession, sf_dir: str, fmt: str):
-    """Write pages once per (sf_dir, fmt) as JSONL or CSV; returns the
-    staged path. Atomic-rename publish; unique private staging dir."""
-    pages = build_pages_staged(spark, sf_dir, with_html=False)
-    key = hashlib.sha256(
-        f"{sf_dir}|textio|{fmt}|v1".encode()).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"gps_textio_{fmt}_{key}")
-    if not os.path.exists(path):
-        tmp = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        w = pages.repartition(8).write.mode("overwrite")
+def _stage_text(spark: SparkSession, sf_dir: str, fmt: str) -> str:
+    """Write pages once per input as JSONL or CSV; returns the staged
+    path (``synth.stage``)."""
+    def write(tmp: str) -> None:
+        w = (build_pages_staged(spark, sf_dir, with_html=False)
+             .repartition(8).write.mode("overwrite")
+             .option("timestampFormat", TS_FMT))
         if fmt == "jsonl":
-            w.option("timestampFormat", TS_FMT).json(tmp)
+            w.json(tmp)
         else:
-            (w.option("header", "true").option("quoteAll", "true")
-             .option("timestampFormat", TS_FMT).csv(tmp))
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+            w.option("header", "true").option("quoteAll", "true").csv(tmp)
+
+    return stage(spark, sf_dir, f"textio_{fmt}", "v2", write)
 
 
 def read_pages_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .synth import _stage_media, build_pages_staged
+from .synth import build_pages_staged, stage_parquet
 from ..operators.dedup import sql_hash60
 
 # records per blob (average) — the packer groups pages by a
@@ -70,8 +70,7 @@ def build_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def build_warc_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_warc materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "warc", build_warc,
-                        version="v2-16-per-blob")
+    return stage_parquet(spark, sf_dir, "warc", "v2-16-per-blob", build_warc)
 
 
 def _gzip_member(payload: bytes) -> bytes:
@@ -134,7 +133,7 @@ def build_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def build_warc_gz_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_warc_gz materialized once per sf_dir."""
-    return _stage_media(spark, sf_dir, "warc_gz", build_warc_gz)
+    return stage_parquet(spark, sf_dir, "warc_gz", "v1", build_warc_gz)
 
 
 def parse_warc(df: DataFrame, blob_col: str = "warc") -> DataFrame:

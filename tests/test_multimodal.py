@@ -140,3 +140,44 @@ def test_image_dhash_matches_formula_and_groups_dups(spark, sf_dir):
         "url string, png binary")
     two = multimodal.image_dhash(df, "png", "url", strict=True).collect()
     assert two[0]["dhash"] == two[1]["dhash"]
+
+
+def test_image_dhash_agrees_across_codecs(spark):
+    """One 16x16 block-constant image encoded as PNG, GIF (palette
+    exact), RGB TIFF and baseline JPEG hashes identically: every codec
+    of the shared decode table yields the same pixels."""
+    import numpy as np
+
+    from geotiff_processor_spark.functions.gif import encode_gif
+    from geotiff_processor_spark.functions.jpeg import decode_jpeg, \
+        encode_jpeg_planes
+    from geotiff_processor_spark.functions.png import encode_png
+    from geotiff_processor_spark.functions.tiff import encode_tiff
+
+    def plane(blocks):  # 2x2 block values -> 16x16 block-constant plane
+        return np.array(blocks, np.uint8).repeat(8, axis=0).repeat(8, axis=1)
+
+    # DC-only 8x8 blocks round-trip JPEG exactly, so the JPEG's decoded
+    # RGB is the block-constant image the lossless codecs carry.
+    # Brighter-left edges only in the top block row keep every set bit
+    # below 2^63.
+    jpg = encode_jpeg_planes([plane([[200, 50], [60, 180]]),
+                              plane([[100, 150], [120, 140]]),
+                              plane([[140, 110], [130, 120]])])
+    img = decode_jpeg(jpg)
+    colors, idx = np.unique(img.reshape(-1, 3), axis=0, return_inverse=True)
+    pal = np.zeros((256, 3), np.uint8)
+    pal[:len(colors)] = colors
+    payloads = {
+        "png": encode_png(img),
+        "gif": encode_gif(idx.reshape(16, 16).astype(np.uint8), pal),
+        "tiff": encode_tiff(img),
+        "jpeg": jpg,
+    }
+    df = spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in payloads.items()],
+        "url string, png binary")
+    got = {r["url"]: r["dhash"] for r in multimodal.image_dhash(
+        df, "png", "url", strict=True).collect()}
+    assert len(got) == 4
+    assert len(set(got.values())) == 1 and got["png"] != 0, got

@@ -36,3 +36,27 @@ def test_digest_groups_all_langs(spark, sf_dir):
         textio.read_pages_jsonl(spark, sf_dir)).collect()
     assert {r["lang"] for r in out} == {"en", "es", "fr", "pt"}
     assert all(r["n_pages"] > 0 and r["url_hash_sum"] > 0 for r in out)
+
+
+def test_staged_text_follows_rewritten_events(spark, tmp_path, monkeypatch):
+    """Rewriting events.parquet in place must invalidate the staged
+    JSONL/CSV copies: the reads return the new rows, not the old."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+
+    def write_events(n):
+        pq.write_table(pa.table({"event_id": pa.array(range(n), pa.int64())}),
+                       str(sf_dir / "events.parquet"))
+
+    write_events(50)
+    assert textio.read_pages_jsonl(spark, str(sf_dir)).count() == 50
+    assert textio.read_pages_csv(spark, str(sf_dir)).count() == 50
+    write_events(120)
+    assert textio.read_pages_jsonl(spark, str(sf_dir)).count() == 120
+    assert textio.read_pages_csv(spark, str(sf_dir)).count() == 120
